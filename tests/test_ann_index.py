@@ -105,8 +105,11 @@ def test_serving_plan_reads_only_index_and_queries(spark, index_dir):
     # bounded query-vector side (query_id, q_emb); both are ≤ queries ×
     # NPROBE rows by construction. A corpus-sized checkpoint here would
     # be a broken serving plan.
-    rdd_nodes = re.findall(r"\(\d+\) Scan ExistingRDD\n(?:.*\n){1,3}", plan)
-    for node in rdd_nodes:
+    local_nodes = re.findall(
+        r"\(\d+\) (?:LocalTableScan|Scan ExistingRDD)\n(?:.*\n){1,3}", plan
+    )
+    assert local_nodes
+    for node in local_nodes:
         assert "query_id" in node and ("cell" in node or "q_emb" in node), node
     # r17: the serving plan never scans the embeddings table AT ALL —
     # the query side is the local relation `_served_probe_setup`
@@ -337,8 +340,11 @@ def test_sq8_serving_plan_is_routed_and_training_free(spark):
     plan = buf.getvalue()
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
     assert "Generate" not in plan
-    rdd_nodes = re.findall(r"\(\d+\) Scan ExistingRDD\n(?:.*\n){1,3}", plan)
-    for node in rdd_nodes:
+    local_nodes = re.findall(
+        r"\(\d+\) (?:LocalTableScan|Scan ExistingRDD)\n(?:.*\n){1,3}", plan
+    )
+    assert local_nodes
+    for node in local_nodes:
         assert "query_id" in node and ("cell" in node or "q_emb" in node), node
     # r17: no embeddings scan anywhere — the query side is the local
     # relation from `_served_probe_setup`'s one bounded job

@@ -68,6 +68,27 @@ def test_hot_paths_have_no_python_udf(spark):
         assert "BatchEvalPython" not in plan, f"{name} fell back to a Python UDF"
 
 
+@pytest.mark.parametrize(
+    "name, local_scans",
+    [
+        ("immigration_etl_fact", 5),      # the five SAS label dims
+        ("knn_ivf_served", 2),            # probe list + query vectors
+        ("knn_sq8_served", 2),
+        ("knn_ivfpq_served", 2),
+        ("knn_ivf_filtered_served", 2),
+    ],
+)
+def test_driver_built_frames_scan_as_local_tables(spark, name, local_scans):
+    """Driver-built frames (``sources.readers.local_frame``) plan as JVM
+    LocalTableScans. A ``createDataFrame(list)`` frame would scan as an
+    ExistingRDD over ``applySchemaToPythonRDD`` and start Python workers
+    on every action; the only ExistingRDD scans allowed are
+    localCheckpoint ones, which carry no Python lineage."""
+    plan = plan_of(spark, name)
+    assert plan.count("LocalTableScan (") >= local_scans
+    assert "PythonRDD" not in plan
+
+
 def test_knn_broadcasts_query_side(spark):
     plan = plan_of(spark, "knn_brute_force")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan

@@ -1,10 +1,20 @@
 """Source layer (S1-S4; reference etl.py:128-158)."""
 
 import pytest
+from pyspark.errors import PySparkTypeError, PySparkValueError
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    FloatType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from udacity_dend_capstone_immigration_spark.sources.readers import (
     first_available,
     from_pairs,
+    local_frame,
     read_csv_with_schema,
 )
 from udacity_dend_capstone_immigration_spark.plans.immigration_etl import DEMOGRAPHICS_SCHEMA
@@ -15,6 +25,78 @@ def test_from_pairs(spark):
     assert df.columns == ["mode_id", "mode_name"]
     assert df.schema["mode_id"].dataType.typeName() == "string"
     assert df.count() == 2
+
+
+#: (schema, rows) for the schemas the package's driver-built frames use:
+#: label dims, store meta rows, probe lists, query vectors in the
+#: embedding column's own array<float>, centroid/codeword arrays, BPE
+#: merges and encoded words, a non-nullable report schema, and the
+#: empty ETL demographics frame.
+_LOCAL_FRAME_CASES = [
+    ("mode_id string, mode_name string", [("1", "Air"), ("2", None)]),
+    ("k int, cap int, n_buckets int", [(5, 200, 16)]),
+    ("query_id long, cell long", [(0, 3), (0, 7), (9, None)]),
+    (
+        StructType(
+            [
+                StructField("query_id", LongType()),
+                StructField("q_emb", ArrayType(FloatType())),
+            ]
+        ),
+        [(0, [0.1, -2.5, 3.25]), (1, None), (2, [])],
+    ),
+    ("cent_id long, cent_emb array<double>", [(0, [0.5, 1e-300]), (1, [None, 2.0])]),
+    (
+        "merge_round int, lft string, rgt string, merged string, cnt bigint",
+        [(1, "t", "h", "th", 40), (2, "th", "e", "the", 31)],
+    ),
+    ("term string, cnt bigint, syms array<string>", [("the", 3, ["th", "e"]), ("a", 1, None)]),
+    (
+        StructType(
+            [
+                StructField("cell", LongType(), nullable=False),
+                StructField("retrain_due", BooleanType(), nullable=False),
+            ]
+        ),
+        [(0, True), (1, False)],
+    ),
+    ("_rsum_pid int, _rsum_gkey string, _rsum_off long, _rsum_tot long", [(0, "g", 0, 9)]),
+    ("path string", []),
+    (DEMOGRAPHICS_SCHEMA, []),
+]
+
+
+@pytest.mark.parametrize("schema, rows", _LOCAL_FRAME_CASES)
+def test_local_frame_matches_list_path(spark, schema, rows):
+    """Same rows and same schema (nullability included) as
+    ``createDataFrame(rows, schema)``, but planned as a JVM local
+    relation. The partition count differs: a local relation has
+    min(len(rows), defaultParallelism) partitions (0 when empty), the
+    list path always defaultParallelism."""
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "PythonRDD" not in plan
+    par = spark.sparkContext.defaultParallelism
+    assert got.rdd.getNumPartitions() == min(len(rows), par)
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1.5,)], "a long"),  # Arrow alone would store 1
+        ([("7",)], "a int"),
+        ([(None,)], StructType([StructField("a", LongType(), nullable=False)])),
+        ([(1 << 40,)], "a int"),
+    ],
+)
+def test_local_frame_rejects_what_the_list_path_rejects(spark, rows, schema):
+    with pytest.raises((PySparkTypeError, PySparkValueError)) as want:
+        spark.createDataFrame(rows, schema)
+    with pytest.raises(want.type):
+        local_frame(spark, rows, schema)
 
 
 def test_csv_with_schema_semicolon(spark, tmp_path):

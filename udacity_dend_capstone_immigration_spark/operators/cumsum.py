@@ -69,6 +69,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
+
 _PID = "_rsum_pid"
 #: unit-separator: never collides with real key text
 _SEP = "\x1f"
@@ -93,7 +95,7 @@ def _cols(order_cols: list[Column | str]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
-def _estimated_bytes(df: DataFrame) -> int | None:
+def estimated_bytes(df: DataFrame) -> int | None:
     """Catalyst's sizeInBytes estimate for the optimized plan — file
     sizes scaled through projections/filters; no job runs. ``None``
     when the estimate is unavailable (caller treats as large)."""
@@ -155,7 +157,7 @@ def grouped_running_sum(
     _check_group_type(df, group_col)
     order = _cols(order_cols)
     if shape == "auto":
-        est = _estimated_bytes(df)
+        est = estimated_bytes(df)
         shape = "window" if est is not None and est <= window_max_bytes else "range"
     if shape == "window":
         return _window_shape(df, group_col, order, value_col, out_col, total_col)
@@ -233,7 +235,8 @@ def _range_shape(
         # per-group total just repeats per partition-run) as a
         # broadcast-joined frame instead of a create_map literal
         spark = df.sparkSession
-        off_df = spark.createDataFrame(
+        off_df = local_frame(
+            spark,
             [
                 (pid, g, off, totals[g])
                 for (pid, g), off in offsets.items()

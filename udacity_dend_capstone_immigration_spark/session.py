@@ -14,8 +14,11 @@ commented shuffle-partition override) but tuned for modern Spark:
   (notebook cell 47). Spark 4 defaults ANSI on, which changes those
   semantics; we pin ANSI off so behavior matches row-for-row
   (SURVEY.md §7.3 risk 2).
-- **Arrow on** for any pandas-UDF exchange (the engine's only Python
-  touchpoints are vectorized, never row-at-a-time).
+- **Arrow on** for any pandas-UDF exchange. Python workers run only the
+  vectorized Arrow/pandas kernels in ``operators``, never row-at-a-time
+  UDFs; driver-built frames go through ``sources.readers.local_frame``,
+  which ships an Arrow table to a JVM ``LocalTableScan`` and starts no
+  Python worker at all.
 """
 
 from __future__ import annotations

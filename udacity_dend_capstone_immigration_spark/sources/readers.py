@@ -11,8 +11,16 @@ from __future__ import annotations
 import os
 from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 #: Tables shipped by the driver testdata (TESTDATA.md).
 STAR_TABLES = (
@@ -62,6 +70,42 @@ def read_csv_with_schema(
     return spark.read.csv(path, sep=sep, header=header, schema=schema)
 
 
+def local_frame(
+    spark: SparkSession,
+    rows: Iterable[Sequence],
+    schema: str | StructType,
+) -> DataFrame:
+    """Driver-side rows → DataFrame as a JVM local relation (S4).
+
+    ``rows`` are positional tuples (or ``Row`` s) in ``schema`` order;
+    ``schema`` is a DDL string or a ``StructType``. The rows become one
+    ``pyarrow.Table`` typed by the schema's Arrow types, which Spark
+    plans as a ``LocalTableScan`` carrying a real size estimate.
+    ``createDataFrame(list, schema)`` instead builds a Python RDD
+    (``parallelize`` + ``applySchemaToPythonRDD``): every action over
+    any plan containing it starts Python workers to re-serialize the
+    rows, and Catalyst sees its size as unknown.
+
+    Every row first passes the same per-row verifier the list path
+    runs: Arrow alone would silently truncate a float stored into a
+    ``long`` column and accept ``None`` in a non-nullable field.
+    Callers keep ``rows`` bounded — the whole table lives in the plan.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def from_pairs(
     spark: SparkSession,
     pairs: Iterable[tuple[str, str]],
@@ -69,13 +113,13 @@ def from_pairs(
 ) -> DataFrame:
     """Local-collection source (S4; reference etl.py:169-172 and siblings).
 
-    Driver-side tuples → 2-column string DataFrame. These are tiny dim
-    tables (≤660 rows) — they broadcast in every join they participate in.
+    Driver-side tuples → 2-column string :func:`local_frame`. These are
+    tiny label dims (≤660 rows); as local relations Catalyst knows their
+    size, so they broadcast in every join they participate in.
     """
-    schema = StructType()
-    for name in col_names:
-        schema = schema.add(name, "string")
-    return spark.createDataFrame(list(pairs), schema=schema)
+    return local_frame(
+        spark, pairs, StructType([StructField(c, StringType()) for c in col_names])
+    )
 
 
 def first_available(spark: SparkSession, candidates: Sequence[tuple[str, str]]) -> DataFrame:

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.operators.asof import asof_join
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import dsum, query, sql_dsum, table
 
 
@@ -786,21 +787,31 @@ def events_dpp_partitioned_join(spark, sf_dir):
     from udacity_dend_capstone_immigration_spark.sources.writers import write_parquet
 
     write_parquet(
-        ev.select("event_id", "event_type", "value"), out, partition_by=("event_type",)
+        ev.select("event_id", "event_type", "value"),
+        f"{out}/fact",
+        partition_by=("event_type",),
     )
-    fact = spark.read.parquet(out)
     # the dim: every type labeled; only the predicate on the DIM decides
-    # which fact partitions exist in the plan's runtime filter
-    dim = spark.createDataFrame(
-        [
-            ("click", "engagement"),
-            ("view", "engagement"),
-            ("purchase", "conversion"),
-            ("signup", "conversion"),
-            ("error", "ops"),
-        ],
-        "event_type string, category string",
+    # which fact partitions exist in the plan's runtime filter. It is
+    # read back as a table, as production dims are: over a local
+    # relation Catalyst evaluates the predicate at plan time, which
+    # leaves DPP no dim-side filter to fire on.
+    write_parquet(
+        local_frame(
+            spark,
+            [
+                ("click", "engagement"),
+                ("view", "engagement"),
+                ("purchase", "conversion"),
+                ("signup", "conversion"),
+                ("error", "ops"),
+            ],
+            "event_type string, category string",
+        ),
+        f"{out}/dim",
     )
+    fact = spark.read.parquet(f"{out}/fact")
+    dim = spark.read.parquet(f"{out}/dim")
     joined = fact.join(
         F.broadcast(dim.where(F.col("category") == "engagement")), "event_type"
     )

@@ -16,6 +16,7 @@ from udacity_dend_capstone_immigration_spark.workload.base import read_parquet_m
 from pyspark.sql import functions as F
 
 from udacity_dend_capstone_immigration_spark.functions.text import tokenize
+from udacity_dend_capstone_immigration_spark.sources.readers import local_frame
 from udacity_dend_capstone_immigration_spark.workload.base import ORACLES, query, table
 from udacity_dend_capstone_immigration_spark.workload.textops import TOKS
 
@@ -283,8 +284,8 @@ def bpe_train_merges(spark, sf_dir):
     rounds emit nothing — exactly as the oracle's empty best{{r}} CTEs
     do."""
     merges, _ = _bpe_train(spark, table(spark, sf_dir, "documents"))
-    return spark.createDataFrame(
-        merges, "merge_round int, lft string, rgt string, merged string, cnt bigint"
+    return local_frame(
+        spark, merges, "merge_round int, lft string, rgt string, merged string, cnt bigint"
     )
 
 
@@ -298,11 +299,11 @@ def _vocab_partitions(docs) -> int:
     training round re-scans the checkpoint through a Python kernel, so
     empty partitions cost a worker round-trip each, per round."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
-        _estimated_bytes,
+        estimated_bytes,
     )
 
     par = docs.sparkSession.sparkContext.defaultParallelism
-    est = _estimated_bytes(docs)
+    est = estimated_bytes(docs)
     if est is None or est >= (32 << 20) * par:
         return par
     return max(1, est // (32 << 20) + 1)
@@ -504,11 +505,11 @@ def _bpe_train(spark, docs):
     vocab-keyed exchanges + 3 sorts per round through the window
     pipeline)."""
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
-        _estimated_bytes,
+        estimated_bytes,
     )
     from udacity_dend_capstone_immigration_spark.operators.spread import spread_scan
 
-    est = _estimated_bytes(docs)
+    est = estimated_bytes(docs)
     if est is not None and est <= _BPE_DRIVER_CORPUS_BYTES:
         vocab = (
             spread_scan(docs)
@@ -519,8 +520,8 @@ def _bpe_train(spark, docs):
         rows = [(r["term"], int(r["cnt"])) for r in vocab.collect()]
         if len(rows) <= _BPE_DRIVER_MAX_VOCAB:
             merges, words_rows = _bpe_train_local(rows)
-            words = spark.createDataFrame(
-                words_rows, "term string, cnt bigint, syms array<string>"
+            words = local_frame(
+                spark, words_rows, "term string, cnt bigint, syms array<string>"
             )
             return merges, words
     words0 = _bpe_vocab(docs)
@@ -604,8 +605,8 @@ def build_bpe_store(spark, docs, out_dir: str) -> str:
 
     merges, words = _bpe_train(spark, docs)
     write_table(
-        spark.createDataFrame(
-            merges, "merge_round int, lft string, rgt string, merged string, cnt bigint"
+        local_frame(
+            spark, merges, "merge_round int, lft string, rgt string, merged string, cnt bigint"
         ),
         f"{out_dir}/merges",
     )
