@@ -36,10 +36,8 @@ _SLOW_TIER = {
     # lifecycle / soak tests, measured call >= 7s
     "test_pipeline_stream.py::test_streamed_pipeline_equals_one_shot",
     "test_dedupstore.py::test_stream_append_two_waves_cross_wave_crossing_and_fold",
-    "test_chunkstore.py::test_chunk_store_delete_roundtrip_stage_gate",
     "test_index_maintenance.py::test_retrain_commit_marker_torn_crash_windows",
     "test_dedupstore.py::test_fold_applies_deletes_physically",
-    "test_chunkstore.py::test_chunk_store_tombstone_serve_equals_fold_and_plan_noop",
     "test_dedup_incremental.py::test_new_doc_bridges_two_old_clusters",
     "test_index_maintenance.py::test_sq8_reindex_rebuilds_from_source_and_retires",
     "test_index_maintenance.py::test_retrain_restores_fixed_point_and_retires_deltas",

@@ -241,6 +241,64 @@ def test_chunk_documents_boundaries_and_coverage(spark):
         assert covered == set(range(len(toks))), f"doc {d} has uncovered tokens"
 
 
+def test_chunk_grid_exhaustive_vs_reference(spark):
+    """Exhaustive window-grid check: for every token count 0..40 and a
+    spread of (size, stride) configs (shorter-than-window, exact
+    multiples, overlap, stride==size, stride 1), chunk_documents must
+    equal a direct Python reference — every boundary, every tail, and
+    the no-fully-redundant-tail rule. One Spark job per config."""
+    import hashlib
+
+    from udacity_dend_capstone_immigration_spark.operators.curation import (
+        chunk_documents,
+    )
+
+    def reference(toks, size, stride):
+        if not toks:
+            return {}
+        nt = len(toks)
+        n_chunks = 1 if nt <= size else -(-(nt - size) // stride) + 1
+        out = {}
+        for k in range(n_chunks):
+            win = toks[k * stride : k * stride + size]
+            out[k] = (
+                k * stride,
+                len(win),
+                hashlib.md5(" ".join(win).encode()).hexdigest(),
+            )
+        return out
+
+    docs = [
+        (n, " ".join(f"t{i}" for i in range(n))) for n in range(0, 41)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    for size, stride in [(8, 5), (6, 6), (5, 3), (4, 1), (64, 48), (3, 2)]:
+        rows = chunk_documents(
+            df, "doc_id", "text", size=size, stride=stride
+        ).collect()
+        got = {}
+        for r in rows:
+            got.setdefault(r["doc_id"], {})[r["chunk_idx"]] = (
+                r["start_tok"],
+                r["n_tokens"],
+                r["chunk_hash"],
+            )
+        for n, text in docs:
+            want = reference(text.split() if text else [], size, stride)
+            assert got.get(n, {}) == want, (size, stride, n)
+            # coverage + no-redundant-tail invariants from the reference
+            if want:
+                covered = set()
+                for k, (st, ln, _h) in want.items():
+                    covered.update(range(st, st + ln))
+                assert covered == set(range(n))
+                last = max(want)
+                if last > 0:
+                    # the final window adds at least one NEW token
+                    prev_end = (last - 1) * stride + min(size, n - (last - 1) * stride)
+                    assert last * stride + want[last][1] > prev_end
+
+
 def test_chunk_novelty_funnel_gate(spark):
     """r16 composition gate: the chunk-novelty funnel matches its
     (spliced) DuckDB oracle value-for-value at sf0.001, the novelty

@@ -150,149 +150,3 @@ def test_real_codec_content_digest_raises(media):
     finally:
         set_codec(FakeCodec())
 
-
-def test_multimodal_chunk_dedup_stage_gate(spark):
-    """r18 stage-gate: the sub-file fixed-window dedup report matches
-    its DuckDB oracle value-for-value at sf0.001, and it finds the
-    tail-clone sharing that whole-payload dedup is blind to."""
-    import duckdb
-
-    from udacity_dend_capstone_immigration_spark.workload.multimodal import (
-        _MM_CHUNK_DEDUP_ORACLE,
-        multimodal_chunk_dedup,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = sorted(map(tuple, multimodal_chunk_dedup(spark, sf).collect()))
-    con = duckdb.connect()
-    con.sql(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
-    )
-    want = sorted(map(tuple, con.sql(_MM_CHUNK_DEDUP_ORACLE).fetchall()))
-    assert got == want
-    assert len(got) > 10  # clone windows actually dedup
-    assert all(r[1] >= 2 for r in got)
-
-
-def test_cdc_chunking_reference_and_shift_robustness(spark):
-    """(a) the distributed CDC chunker equals the pure-Python reference
-    boundary-for-boundary and digest-for-digest; (b) chunks cover the
-    content exactly with sizes inside [min, max] (final chunk may run
-    short); (c) the headline property: a byte-SHIFTED copy (prefix
-    insertion, shift % window != 0) shares most CDC chunk digests with
-    the original while FIXED windows share none."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from udacity_dend_capstone_immigration_spark.operators.multimodal import (
-        cdc_boundaries,
-        cdc_chunk_fingerprints,
-        pack_fake_media,
-        payload_chunk_fingerprints,
-    )
-
-    rng_bytes = hashlib.md5(b"seed").digest()
-    content = b""
-    while len(content) < 8000:
-        rng_bytes = hashlib.md5(rng_bytes).digest()
-        content += rng_bytes
-    shifted = b"\x01\x02\x03" + content  # 3-byte shift
-
-    rows = [
-        (1, pack_fake_media(1, 1, 3, content)),
-        (2, pack_fake_media(1, 1, 3, shifted)),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, data binary")
-
-    out = cdc_chunk_fingerprints(media).collect()
-    got = {}
-    for r in out:
-        got.setdefault(r["media_id"], []).append(
-            (r["chunk_idx"], r["offset"], r["n_bytes"], r["digest"])
-        )
-    for mid, payload in [(1, content), (2, shifted)]:
-        ref = cdc_boundaries(payload)
-        want = [
-            (k, off, ln, hashlib.md5(payload[off : off + ln]).hexdigest())
-            for k, (off, ln) in enumerate(ref)
-        ]
-        assert sorted(got[mid]) == want, mid
-        # exact coverage, size bounds
-        pos = 0
-        for k, (off, ln) in enumerate(ref):
-            assert off == pos
-            pos += ln
-            if k < len(ref) - 1:
-                assert 64 <= ln <= 1024
-        assert pos == len(payload)
-
-    d1 = {d for _, _, _, d in got[1]}
-    d2 = {d for _, _, _, d in got[2]}
-    shared = len(d1 & d2) / max(len(d1), 1)
-    assert shared > 0.5, f"CDC lost re-sync: shared={shared}"
-
-    fixed = payload_chunk_fingerprints(media).collect()
-    f1 = {r["digest"] for r in fixed if r["media_id"] == 1}
-    f2 = {r["digest"] for r in fixed if r["media_id"] == 2}
-    assert not (f1 & f2), "3-byte shift should break every fixed window"
-
-
-def test_cdc_boundaries_properties():
-    """Property test (no Spark): for random content and random valid
-    (min, avg, max) configs — exact coverage, size bounds, determinism,
-    and the prefix-stability property (appending bytes never changes
-    boundaries strictly before the last pre-existing cut)."""
-    import hashlib
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from udacity_dend_capstone_immigration_spark.operators.multimodal import (
-        cdc_boundaries,
-    )
-
-    configs = st.sampled_from(
-        [(16, 64, 256), (32, 128, 512), (64, 256, 1024), (8, 32, 64)]
-    )
-
-    @settings(max_examples=60, deadline=None)
-    @given(
-        seed=st.integers(0, 2**32 - 1),
-        n=st.integers(0, 4000),
-        cfg=configs,
-    )
-    def run(seed, n, cfg):
-        mn, avg, mx = cfg
-        raw = seed.to_bytes(4, "big")
-        content = b""
-        while len(content) < n:
-            raw = hashlib.md5(raw).digest()
-            content += raw
-        content = content[:n]
-        cuts = cdc_boundaries(content, avg_size=avg, min_size=mn, max_size=mx)
-        # determinism
-        assert cuts == cdc_boundaries(
-            content, avg_size=avg, min_size=mn, max_size=mx
-        )
-        # exact coverage, in order
-        pos = 0
-        for i, (off, ln) in enumerate(cuts):
-            assert off == pos and ln > 0
-            pos += ln
-            if i < len(cuts) - 1:
-                assert mn <= ln <= mx
-            else:
-                assert ln <= mx
-        assert pos == len(content)
-        assert (len(cuts) == 0) == (n == 0)
-        # appending content never moves cuts strictly before the last
-        # existing cut (boundaries are locally determined)
-        if len(cuts) > 1:
-            ext = cdc_boundaries(
-                content + b"XYZ" * 10, avg_size=avg, min_size=mn, max_size=mx
-            )
-            stable = cuts[:-1]
-            assert ext[: len(stable)] == stable
-
-    run()

@@ -88,6 +88,33 @@ def test_every_query_has_an_oracle():
     )
 
 
+def test_every_workload_module_is_imported():
+    """No staged modules: every ``workload/*.py`` (bar ``base`` and the
+    package ``__init__``) is imported by ``workload/__init__.py``, so
+    each query family is either registered under the oracle gate or
+    deleted — never reachable only from its own tests."""
+    import ast
+    import pathlib
+
+    from udacity_dend_capstone_immigration_spark import workload
+
+    pkg = pathlib.Path(workload.__file__).parent
+    tree = ast.parse((pkg / "__init__.py").read_text())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module:
+            if node.module == workload.__name__:
+                imported.update(a.name for a in node.names)
+            elif node.module.startswith(workload.__name__ + "."):
+                imported.add(node.module.rsplit(".", 1)[1])
+    modules = {p.stem for p in pkg.glob("*.py")} - {"base", "__init__"}
+    staged = sorted(modules - imported)
+    assert not staged, (
+        f"workload modules {staged} are not imported by workload/__init__.py: "
+        "register their queries there or delete them"
+    )
+
+
 def test_all_lazy_query_schemas_are_canonicalizable(spark):
     checked = 0
     for name, fn in QUERIES.items():

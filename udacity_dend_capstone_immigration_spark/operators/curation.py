@@ -236,7 +236,6 @@ def chunk_documents(
     text_col: str,
     size: int = 64,
     stride: int = 48,
-    with_text: bool = False,
 ) -> DataFrame:
     """Overlapping token-window CHUNKS — the retrieval-prep operator
     (RAG corpora chunk before embedding/indexing; size/stride in the
@@ -272,52 +271,10 @@ def chunk_documents(
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
     )
     win = F.slice("_t", F.col("chunk_idx") * stride + 1, size)
-    cols = [
+    return ex.select(
         F.col(id_col),
         F.col("chunk_idx"),
         (F.col("chunk_idx") * stride).cast("int").alias("start_tok"),
         F.size(win).cast("int").alias("n_tokens"),
         F.md5(F.concat_ws(" ", win)).alias("chunk_hash"),
-    ]
-    if with_text:
-        # the joined window body, for consumers that vectorize chunk
-        # CONTENT in an Arrow stage (chunk_tf_knn); tokens contain no
-        # spaces, so `.split(' ')` round-trips the token list exactly.
-        # Default off: the registered chunking queries shuffle hashes,
-        # never bodies.
-        cols.append(F.concat_ws(" ", win).alias("win_text"))
-    return ex.select(*cols)
-
-
-def chunk_token_rows(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    size: int = 64,
-    stride: int = 48,
-) -> DataFrame:
-    """(id, chunk_idx, tok) rows — :func:`chunk_documents`' window grid
-    with the window CONTENTS exploded instead of hashed, for chunk-
-    grain vectorization (hashed-TF, n-gram stats). Same codegen'd
-    sequence/slice shape plus one bounded second explode (fan-out
-    ≈ size/stride ≤ 2 rows per source token) — still a pure map pass,
-    zero shuffle of its own; the shuffle, if any, belongs to the
-    downstream aggregate, which carries (id, idx, bucket) ints."""
-    from udacity_dend_capstone_immigration_spark.functions.text import tokenize
-
-    d = df.select(F.col(id_col), tokenize(text_col).alias("_t")).where(
-        F.size("_t") > 0
-    )
-    nt = F.size("_t")
-    over = nt - F.lit(size) + F.lit(stride - 1)
-    extra = ((over - over % F.lit(stride)) / F.lit(stride)).cast("int")
-    n_chunks = F.when(nt <= size, F.lit(1)).otherwise(extra + F.lit(1))
-    ex = d.select(
-        F.col(id_col),
-        F.col("_t"),
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    )
-    win = F.slice("_t", F.col("chunk_idx") * stride + 1, size)
-    return ex.select(
-        F.col(id_col), F.col("chunk_idx"), F.explode(win).alias("tok")
     )

@@ -275,153 +275,3 @@ def sample_frames(media: DataFrame, every_n: int = 10, n_frames_col: str = "n_fr
 
     return idx.mapInPandas(run, FRAME_SCHEMA)
 
-
-def payload_chunk_fingerprints(
-    media: DataFrame, chunk_size: int = 256, header_len: int = 16
-) -> DataFrame:
-    """Fixed-size BYTE windows over each payload's content (the bytes
-    after the ``header_len`` codec header) with a per-window digest —
-    the sub-file storage-dedup primitive: two media sharing a run of
-    content at window-aligned offsets share window digests even when
-    their full payloads (and so ``payload_fingerprints``) differ.
-
-    Entirely JVM-native: binary ``substring`` windows + ``md5(hex(…))``
-    digests (md5-of-hex rather than md5-of-blob because the DuckDB
-    oracle's md5 is VARCHAR-only — hex round-trips bytes exactly and
-    identically in both engines, verified uppercase parity). The only
-    row growth is the bounded ~payload/chunk_size explode; emitted
-    rows carry offsets + digests, never chunk bytes — downstream
-    dedup shuffles stay fingerprint-sized at any corpus.
-
-    Returns (media_id, chunk_idx, offset, n_bytes, digest); offset is
-    0-based within the CONTENT (header excluded). Empty payloads yield
-    no rows. Final window may run short; no fully-empty tail.
-    """
-    plen = (F.length("data") - F.lit(header_len)).alias("plen")
-    d = media.select("media_id", "data", plen).where(F.col("plen") > 0)
-    # ceil(plen/size) via exact-integer bucketing (num − num % span —
-    # Column `/` is double division, CLAUDE.md rule)
-    over = F.col("plen") - 1
-    n_chunks = ((over - over % chunk_size) / chunk_size).cast("int") + 1
-    ex = d.select(
-        "media_id",
-        "data",
-        "plen",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
-    )
-    chunk = F.expr(
-        f"substring(data, {header_len + 1} + chunk_idx * {chunk_size}, {chunk_size})"
-    )
-    return ex.select(
-        "media_id",
-        "chunk_idx",
-        (F.col("chunk_idx") * chunk_size).cast("int").alias("offset"),
-        F.least(
-            F.lit(chunk_size), F.col("plen") - F.col("chunk_idx") * chunk_size
-        ).cast("int").alias("n_bytes"),
-        F.md5(F.hex(chunk)).alias("digest"),
-    )
-
-
-#: Deterministic gear table for content-defined chunking: entry i is
-#: the first 8 bytes of md5(byte i) — reproducible everywhere, no RNG.
-def _gear_table() -> list:
-    import hashlib
-
-    return [
-        int(hashlib.md5(bytes([i])).hexdigest()[:16], 16) for i in range(256)
-    ]
-
-
-def cdc_boundaries(
-    content: bytes,
-    avg_size: int = 256,
-    min_size: int = 64,
-    max_size: int = 1024,
-    gear: list | None = None,
-) -> list:
-    """Gear-hash content-defined chunk boundaries (FastCDC's core idea,
-    public literature): roll ``h = (h << 1) + gear[b]`` over the bytes
-    and cut where ``h & (avg_size - 1) == 0`` past ``min_size``, with a
-    ``max_size`` forced cut. Returns (offset, length) pairs covering
-    the content exactly. Boundaries depend only on LOCAL content, so a
-    byte-shifted copy re-synchronizes and shares all interior chunks —
-    the property fixed windows lack."""
-    if gear is None:
-        gear = _gear_table()
-    mask = avg_size - 1
-    assert avg_size & mask == 0, "avg_size must be a power of two"
-    out = []
-    start = 0
-    h = 0
-    n = len(content)
-    for i, b in enumerate(content):
-        h = ((h << 1) + gear[b]) & 0xFFFFFFFFFFFFFFFF
-        ln = i - start + 1
-        if (ln >= min_size and (h & mask) == 0) or ln >= max_size:
-            out.append((start, ln))
-            start = i + 1
-            h = 0
-    if start < n:
-        out.append((start, n - start))
-    return out
-
-
-def cdc_chunk_fingerprints(
-    media: DataFrame,
-    avg_size: int = 256,
-    min_size: int = 64,
-    max_size: int = 1024,
-    header_len: int = 16,
-) -> DataFrame:
-    """Content-defined twin of :func:`payload_chunk_fingerprints`:
-    chunk boundaries follow the BYTES (gear-hash), so shared content
-    dedups across media even at arbitrary byte offsets — the
-    storage/dedup behavior fixed windows only give at aligned offsets.
-    Arrow ``mapInPandas`` (per-byte rolling hash is inherently
-    imperative); emitted rows carry offsets + md5 digests, never chunk
-    bytes. Returns (media_id, chunk_idx, offset, n_bytes, digest)."""
-    import hashlib
-
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("chunk_idx", IntegerType()),
-            StructField("offset", IntegerType()),
-            StructField("n_bytes", IntegerType()),
-            StructField("digest", StringType()),
-        ]
-    )
-    gear = _gear_table()
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "media_id": [], "chunk_idx": [], "offset": [],
-                "n_bytes": [], "digest": [],
-            }
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                content = bytes(data)[header_len:]
-                for k, (off, ln) in enumerate(
-                    cdc_boundaries(content, avg_size, min_size, max_size, gear)
-                ):
-                    out["media_id"].append(int(mid))
-                    out["chunk_idx"].append(k)
-                    out["offset"].append(off)
-                    out["n_bytes"].append(ln)
-                    out["digest"].append(
-                        hashlib.md5(content[off : off + ln]).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "data").mapInPandas(run, schema)

@@ -877,15 +877,6 @@ def documents_stream_index_append(spark, sf_dir):
     return _index_aggregate(spark, out)
 
 
-#: Join-strategy hint for the batch-classify shingle joins
-#: ("merge" | "shuffle_hash") — the hint exists because the batch side
-#: is explode-inflated (estimate-blind: a static broadcast of an
-#: SF-scaling relation must be impossible); WHICH shuffled strategy is
-#: an A/B decision (tools/ab_classify_join.py — r16 only measured
-#: shuffle_hash bundled with the reverted grouped-array carry).
-_CLASSIFY_JOIN_HINT = "merge"
-
-
 def classify_batch_against_index(
     spark: SparkSession, index_dir: str, batch: DataFrame
 ) -> DataFrame:
@@ -915,13 +906,16 @@ def classify_batch_against_index(
     # the grouped shape read 5.4-33s warm where this flat shape read
     # 2.2-6.9s; at sf0.1 the two are within noise (1.25 vs 1.44). The
     # merge hint stays: the batch side is explode-inflated
-    # (estimate-blind) and a backfill batch is NOT broadcast-bounded.
+    # (estimate-blind) and a backfill batch is NOT broadcast-bounded,
+    # so a static broadcast of it must be impossible. Merge rather
+    # than shuffle_hash: r16 only measured shuffle_hash bundled with
+    # the reverted grouped-array carry.
     ne = shingle_rows(batch, "doc_id", "text", 3).withColumnRenamed(
         "shingle", "g"
     )
     inter = (
         ne.select(F.col("doc_id").alias("nid"), "g")
-        .hint(_CLASSIFY_JOIN_HINT)
+        .hint("merge")
         .join(cke, "g")
         .groupBy("nid", "cid")
         .agg(F.count(F.lit(1)).alias("i"))
@@ -936,7 +930,7 @@ def classify_batch_against_index(
     )
     jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
     near = (
-        inter.join(za.hint(_CLASSIFY_JOIN_HINT), "nid")
+        inter.join(za.hint("merge"), "nid")
         .join(zb, "cid")
         .where(jac >= 0.5)
         .select(F.col("nid").alias("doc_id"))

@@ -254,78 +254,3 @@ def multimodal_payload_dedup(spark, sf_dir):
         .where(F.col("n_copies") >= 2)
     )
 
-
-# --- sub-file payload chunk dedup (STAGED r16 for r18 — the r17
-# window is full; stage-gate in tests/test_multimodal.py): the
-# storage-dedup tier below whole-payload fingerprints. The injected
-# copies here are TAIL CLONES (the copy's text is the original's from
-# byte 256 on), so their FULL payloads differ — `multimodal_payload_
-# dedup` reports nothing for them — but every copy window equals the
-# original's next window at a 256-byte-aligned offset, and the
-# chunk-grain report recovers the shared runs. Oracle rebuilds the
-# same windows by slicing the hex encoding of the utf-8 bytes
-# (byte-exact; md5-of-hex in BOTH engines because DuckDB's md5 is
-# VARCHAR-only — cross-engine parity of hex() casing verified r16).
-# The corpus is ASCII (octet_length == length, checked at all SFs),
-# so the tail clone's TEXT slice is byte-aligned in both engines.
-_CHUNK_BYTES = 256
-
-_MM_CHUNK_DEDUP_ORACLE = f"""
-    WITH m AS (
-        SELECT doc_id AS media_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 200001, substring(text, {_CHUNK_BYTES + 1})
-        FROM documents WHERE doc_id % 10 = 0 AND length(text) > {_CHUNK_BYTES}
-    ),
-    b AS (
-        SELECT media_id, hex(encode(text)) AS h,
-               octet_length(encode(text)) AS plen
-        FROM m WHERE octet_length(encode(text)) > 0
-    ),
-    w AS (
-        SELECT media_id,
-               md5(substring(h, k * {2 * _CHUNK_BYTES} + 1, {2 * _CHUNK_BYTES}))
-                   AS digest
-        FROM b, unnest(generate_series(
-                 0, CAST(((plen - 1) - ((plen - 1) % {_CHUNK_BYTES}))
-                         / {_CHUNK_BYTES} AS INT))) u(k)
-    )
-    SELECT digest,
-           CAST(COUNT(DISTINCT media_id) AS BIGINT) AS n_media,
-           CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-           MIN(media_id) AS keep_media_id
-    FROM w GROUP BY digest HAVING COUNT(DISTINCT media_id) >= 2
-"""
-
-
-def multimodal_chunk_dedup(spark, sf_dir):
-    """Window digests shared by >= 2 distinct media, with occurrence
-    counts and a deterministic keeper — the sub-file dedup report
-    (windows of embedded/concatenated media assets dedup across files
-    whose whole-file hashes differ). One digest-sized shuffle; chunk
-    bytes never leave the map side. Fixed windows catch window-ALIGNED
-    sharing only — the content-defined (gear-hash CDC) operator is the
-    shift-robust variant, unit-pinned beside this gate."""
-    from udacity_dend_capstone_immigration_spark.operators.multimodal import (
-        payload_chunk_fingerprints,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    clones = docs.where(
-        (F.col("doc_id") % 10 == 0) & (F.length("text") > _CHUNK_BYTES)
-    ).select(
-        (F.col("doc_id") + 200001).alias("doc_id"),
-        F.substring("text", _CHUNK_BYTES + 1, 1_000_000_000).alias("text"),
-        F.lit(42).alias("n_chars"),
-    )
-    media = documents_as_media(docs).unionByName(documents_as_media(clones))
-    return (
-        payload_chunk_fingerprints(media, chunk_size=_CHUNK_BYTES)
-        .groupBy("digest")
-        .agg(
-            F.count_distinct(F.col("media_id")).cast("bigint").alias("n_media"),
-            F.count(F.lit(1)).cast("bigint").alias("n_occurrences"),
-            F.min("media_id").alias("keep_media_id"),
-        )
-        .where(F.col("n_media") >= 2)
-    )

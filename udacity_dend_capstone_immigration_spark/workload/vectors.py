@@ -713,30 +713,6 @@ def embedding_int8_distortion(spark, sf_dir):
 _PQ_BLOCKS, _PQ_DIM, _PQ_CODES = 4, 16, 16
 
 
-def pq_config_override(blocks: int, codes: int):
-    """Context manager retuning the PQ layout for measurement runs
-    (blocks × codes; dim = 64/blocks) — the `ivf_cells_override`
-    pattern. TOOL-ONLY: the registered queries and their oracles are
-    tuned together for the 4×16 layout; tools/pq_ab.py uses this to A/B
-    a wider budget (e.g. 8 blocks × 256 codes = 8 B/vec, the faiss
-    default m=8/nbits=8) without oracle comparison."""
-    import contextlib
-
-    assert 64 % blocks == 0
-
-    @contextlib.contextmanager
-    def _cm():
-        global _PQ_BLOCKS, _PQ_DIM, _PQ_CODES
-        old = (_PQ_BLOCKS, _PQ_DIM, _PQ_CODES)
-        _PQ_BLOCKS, _PQ_DIM, _PQ_CODES = blocks, 64 // blocks, codes
-        try:
-            yield
-        finally:
-            _PQ_BLOCKS, _PQ_DIM, _PQ_CODES = old
-
-    return _cm()
-
-
 def _pq_codebooks(emb):
     """One trained :class:`Codebook` per block (seeds = the first
     _PQ_CODES vectors' sub-vectors; one L2 Lloyd pass). Eager, like
@@ -2064,9 +2040,9 @@ def knn_ivfpq_served(spark, sf_dir):
     vec_id < 10 query side) and shows PartitionFilters on cell_pt
     (pinned in tests/test_ann_index.py).
 
-    Compressed-layout choice (r12 A/B, tools/pq_ab.py): the registered
-    4×16 budget serves recall@5 0.28-0.36, and WIDER PQ does not
-    rescue it on this corpus — faiss-default 8×256 (8 B/vec) reads
+    Compressed-layout choice (r12 A/B, BASELINE.md "Wider-PQ A/B"):
+    the registered 4×16 budget serves recall@5 0.28-0.36, and WIDER
+    PQ does not rescue it on this corpus — faiss-default 8×256 (8 B/vec) reads
     0.42/0.60 and 16×256 reads 0.60/0.80 (sf0.1/sf0.01), all below
     SQ8's 0.92-0.96 at 64 B/vec — so `knn_sq8_served` is the
     compressed serving default and this path remains the
@@ -2179,7 +2155,7 @@ def knn_sq8_served(spark, sf_dir):
     scan → one Arrow decode stage (stats in closure — 128 doubles, no
     codebook relation, no training) → asymmetric rounded cosine → top-5.
     `ann_sq8_recall` measures the recall claim (0.92 sf0.01 / 0.96
-    sf0.1 — equal to flat); the r12 wider-PQ A/B (tools/pq_ab.py)
+    sf0.1 — equal to flat); the r12 wider-PQ A/B (BASELINE.md)
     confirmed no PQ budget competes on this corpus (8×256 → 0.42-0.60,
     16×256 → 0.60-0.80), making SQ8 the compressed serving DEFAULT.
     The plan is pinned training-free + probe-routed in
