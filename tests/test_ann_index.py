@@ -509,3 +509,76 @@ def test_served_flat_corpus_excludes_query_stream(spark):
     )
     assert vecs.count() == n_corpus
     assert V.served_index_dir(spark, SF_DIR, kind="flat_corpus") == d
+
+
+def _tree_sha256(root: str) -> dict:
+    """{relative path: sha256} of every file under ``root``."""
+    import hashlib
+    import os
+
+    out = {}
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+@pytest.mark.parametrize(
+    "kind,query_name,fold",
+    [
+        ("flat_corpus", "embeddings_stream_index_append", "fold_index_delta"),
+        ("sq8_corpus", "embeddings_stream_sq8_append", "fold_sq8_delta"),
+    ],
+)
+def test_stream_append_clones_leave_memo_unchanged(
+    spark, monkeypatch, kind, query_name, fold
+):
+    """The stream-append roundtrips mutate a per-call
+    `snapshot_index_dir` copy of the memoized corpus index, never the
+    memo: two appends return identical rows (no delta carries over
+    between calls), every copy is a separate dir whose files are not
+    links to the memo's, and folding + compacting a copy leaves the
+    memo's file set and bytes exactly as built."""
+    import os
+
+    from udacity_dend_capstone_immigration_spark.workload import QUERIES
+
+    base = V.served_index_dir(spark, SF_DIR, kind=kind)
+    before = _tree_sha256(base)
+    copies = []
+    real = V.snapshot_index_dir
+
+    def spy(src):
+        copies.append(real(src))
+        return copies[-1]
+
+    monkeypatch.setattr(V, "snapshot_index_dir", spy)
+    runs = [
+        sorted(map(tuple, QUERIES[query_name](spark, SF_DIR).collect()))
+        for _ in range(2)
+    ]
+    assert runs[0] and runs[0] == runs[1]
+    assert len(copies) == 2 and len({base, *copies}) == 3
+    for c in copies:
+        for rel in before:
+            path = os.path.join(c, rel)
+            assert not os.path.islink(path)
+            assert not os.path.samefile(path, os.path.join(base, rel))
+    getattr(V, fold)(spark, copies[0])
+    V.compact_index_cells(spark, copies[0])
+    assert _tree_sha256(base) == before
+    assert V.served_index_dir(spark, SF_DIR, kind=kind) == base
+
+
+def test_served_index_dir_key_includes_n_cells(spark):
+    """`ivf_cells_override` retunes the index a build trains, so the
+    memo must not hand the default-N_CELLS index back under it."""
+    d = V.served_index_dir(spark, SF_DIR, kind="flat")
+    with V.ivf_cells_override(8):
+        d8 = V.served_index_dir(spark, SF_DIR, kind="flat")
+    assert d8 != d
+    assert spark.read.parquet(f"{d8}/ivf_centroids").count() <= 8
+    assert spark.read.parquet(f"{d}/ivf_centroids").count() == 16
+    assert V.served_index_dir(spark, SF_DIR, kind="flat") == d

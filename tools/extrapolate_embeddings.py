@@ -20,7 +20,10 @@ copies are not exact dups, then plants ~2% near-clones (0.05x-std
 jitter) so the dedup stage has real within-cell work at every scale.
 
 Usage: python tools/extrapolate_embeddings.py [--scales 10 100] [--reps 2]
-Writes corpora under /tmp/emb_extrap/ (scratch; regenerated on rerun).
+Writes corpora under $TMPDIR/emb_extrap/ (default /tmp; scratch,
+regenerated on rerun). Spark runs ``local[<usable cores>]`` with as
+many shuffle partitions (32 on the 32-core protocol box) and a 64g
+driver, capped at half the machine's RAM.
 """
 
 from __future__ import annotations
@@ -30,6 +33,7 @@ import json
 import math
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -38,7 +42,14 @@ import numpy as np
 
 BASE_SF_DIR = "/root/testdata/sf0.1"
 BASE_VECS = 2_000
-OUT_ROOT = "/tmp/emb_extrap"
+OUT_ROOT = os.path.join(tempfile.gettempdir(), "emb_extrap")
+
+
+def driver_memory() -> str:
+    """64g, capped at half of ``MemTotal``."""
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return f"{min(64 << 10, kb // 2048)}m"
 
 
 def real_matrix() -> tuple[np.ndarray, np.ndarray]:
@@ -110,19 +121,27 @@ def main() -> None:
     rng = np.random.default_rng(42)
     base, labels = real_matrix()
 
+    cores = len(os.sched_getaffinity(0))
     spark = get_spark_session(
         app_name="embeddings-extrapolation",
-        master="local[32]",
-        shuffle_partitions=32,
+        master=f"local[{cores}]",
+        shuffle_partitions=cores,
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
-            "spark.driver.memory": "64g",
+            "spark.driver.memory": driver_memory(),
             "spark.driver.maxResultSize": "8g",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).select(F.sum("id")).collect()
     spark.range(64).repartition(8).mapInPandas(lambda it: it, "id long").count()
+    # load canary (perfbench's): a fixed CPU-bound md5 job sized to the cores
+    c0 = time.time()
+    spark.range(0, 1_000_000 * cores, 1, cores).select(
+        F.sum(F.xxhash64(F.md5(F.col("id").cast("string"))))
+    ).collect()
+    canary_s = round(time.time() - c0, 3)
+    print(f"canary_s={canary_s} cores={cores} load_avg={os.getloadavg()}", flush=True)
 
     to_time = args.queries or [
         "knn_ivf",
@@ -177,6 +196,7 @@ def main() -> None:
         measure(out_dir, f"x{scale}", n_cells)
 
     spark.stop()
+    report["canary_s"] = canary_s
     print(json.dumps(report))
 
 

@@ -165,17 +165,28 @@ def corpus_pipeline_served(spark, sf_dir):
     # checkpoint first (the range-exchange select SAMPLES its input —
     # repartitionByRange would re-execute the un-checkpointed scoring
     # subtree for the sampling pass) and the select runs the range
-    # shape. Gate = the batch's slim (doc_id, source) scan-derived
-    # Catalyst estimate — same per-row width as the scored rows the
-    # window sorts, scales with the corpus, and unlike the scored
-    # frame's own estimate it is neither explode-blind (under) nor
-    # LogicalRDD-pinned at Long.MaxValue (over).
+    # shape. Gate = a scan-derived Catalyst estimate of the batch at
+    # the row width the window sorts: (doc_id, source) plus the scored
+    # n_bigrams/importance and the cum_mass the window emits, added as
+    # typed null literals so the Project's size scaling counts them
+    # (the bare (doc_id, source) projection reads 0.6× of it). It
+    # scales with the corpus, and unlike the scored frame's own
+    # estimate it is neither explode-blind (under) nor LogicalRDD-
+    # pinned at Long.MaxValue (over).
     from udacity_dend_capstone_immigration_spark.operators.cumsum import (
         WINDOW_MAX_BYTES,
         estimated_bytes,
     )
 
-    est = estimated_bytes(batch.select("doc_id", "source"))
+    est = estimated_bytes(
+        batch.select(
+            "doc_id",
+            "source",
+            F.lit(None).cast("bigint").alias("n_bigrams"),
+            F.lit(None).cast("double").alias("importance"),
+            F.lit(None).cast("bigint").alias("cum_mass"),
+        )
+    )
     fold = est is not None and est <= WINDOW_MAX_BYTES
     if _FOLD_SELECT_OVERRIDE is not None:
         fold = _FOLD_SELECT_OVERRIDE

@@ -1002,8 +1002,10 @@ _Q_CSIM = (
 )
 def embeddings_stream_index_append(spark, sf_dir):
     """STREAMING ingest → index append → serve, end-to-end (r11 verdict
-    next #3): the flat index is built on the corpus partition
-    (vec_id % 7 != 0 — yesterday's index job), the arriving batch
+    next #3): the flat index is cloned from the memoized corpus-partition
+    index (yesterday's index job; vec_id % 7 != 0, `served_index_dir`
+    kind='flat_corpus', copied per call by `snapshot_index_dir` so the
+    memo is never written and no delta carries over), the arriving batch
     (vec_id % 7 = 0) STREAMS in through the foreachBatch exactly-once
     sink (`stream_append_to_ivf_flat_index`: per micro-batch, frozen-
     codebook Arrow assignment, each batch overwriting its own
@@ -1021,19 +1023,15 @@ def embeddings_stream_index_append(spark, sf_dir):
     from udacity_dend_capstone_immigration_spark.workload.vectors import (
         _ivfpq_topk,
         _served_probe_setup,
-        build_ivf_flat_index,
         read_ivf_flat_store,
+        served_index_dir,
+        snapshot_index_dir,
         stream_append_to_ivf_flat_index,
     )
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_new = F.col("vec_id") % 7 == 0
-    idx = build_ivf_flat_index(
-        spark,
-        sf_dir,
-        tempfile.mkdtemp(prefix="ivfflat_ingest_"),
-        emb=emb.where(~is_new),
-    )
+    idx = snapshot_index_dir(served_index_dir(spark, sf_dir, kind="flat_corpus"))
     stream = (
         spark.readStream.schema("vec_id long, embedding array<float>, label int")
         .option("pathGlobFilter", "embeddings.parquet")
@@ -1161,9 +1159,11 @@ _SQ8_CODE_SUM = (
 )
 def embeddings_stream_sq8_append(spark, sf_dir):
     """Streaming ingest into the persisted SQ8 store, end-to-end: the
-    byte-code index is built on the corpus partition (vec_id % 7 != 0
-    — frozen centroids AND frozen affine stats), the arriving batch
-    STREAMS through the exactly-once lineage-addressed delta sink
+    byte-code index is cloned from the memoized corpus-partition index
+    (yesterday's index job; vec_id % 7 != 0, `served_index_dir`
+    kind='sq8_corpus', copied per call by `snapshot_index_dir` — frozen
+    centroids AND frozen affine stats), the arriving batch STREAMS
+    through the exactly-once lineage-addressed delta sink
     (`stream_append_to_sq8_index`; out-of-range values saturate — the
     scalar-quantizer append contract), and the read-back main ∪ delta
     store aggregates per cell split corpus/new with a per-vector
@@ -1172,21 +1172,15 @@ def embeddings_stream_sq8_append(spark, sf_dir):
     so the hash compare proves the streamed bytes are exactly what the
     frozen quantizer assigns. Completes streaming ingest across BOTH
     persisted layouts (flat: `embeddings_stream_index_append`)."""
-    from udacity_dend_capstone_immigration_spark.workload.base import table
     from udacity_dend_capstone_immigration_spark.workload.vectors import (
-        build_ivf_sq8_index,
         read_sq8_store,
+        served_index_dir,
+        snapshot_index_dir,
         stream_append_to_sq8_index,
     )
 
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     is_new = F.col("vec_id") % 7 == 0
-    idx = build_ivf_sq8_index(
-        spark,
-        sf_dir,
-        tempfile.mkdtemp(prefix="ivfsq8_ingest_"),
-        emb=emb.where(~is_new),
-    )
+    idx = snapshot_index_dir(served_index_dir(spark, sf_dir, kind="sq8_corpus"))
     stream = (
         spark.readStream.schema("vec_id long, embedding array<float>, label int")
         .option("pathGlobFilter", "embeddings.parquet")

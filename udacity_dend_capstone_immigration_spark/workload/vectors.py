@@ -294,7 +294,8 @@ def ivf_cells_override(n_cells: int):
     time the Spark side against bigger corpora without oracle
     comparison). Centralizes the try/finally module-state swap the r9
     advice flagged as fragile when hand-rolled per tool; within the
-    block, `_ivf_train` and `_semdedup_grouped` default to ``n_cells``.
+    block, `_ivf_train` and `_semdedup_grouped` default to ``n_cells``
+    and `served_index_dir` memoizes per ``n_cells``.
     Not safe under concurrent in-process query runs at different
     scales (no tool does that)."""
     import contextlib
@@ -1934,11 +1935,13 @@ def compact_index_cells(spark, index_dir: str, cells=None) -> dict:
     return out
 
 
-#: per-process index cache ((sf_dir, kind) -> built index dir): the
-#: driver runs each query in its own process (cold build there —
-#: measured as the build half of the BASELINE row), while bench/tests
-#: build once and serve many, the contract this tier exists to prove.
-#: kind: "pq" | "pq_residual" | "flat" | "sq8".
+#: per-process index cache ((sf_dir, kind, N_CELLS, corpus fingerprint)
+#: -> built index dir): the driver runs each query in its own process
+#: (cold build there — measured as the build half of the BASELINE row),
+#: while bench/tests build once and serve many, the contract this tier
+#: exists to prove. kind: "pq" | "pq_residual" | "flat" | "flat_label" |
+#: "flat_corpus" | "sq8" | "sq8_corpus". Memoized dirs are READ-ONLY:
+#: a mutating consumer works on a :func:`snapshot_index_dir` copy.
 _SERVED_INDEX: dict[tuple, str] = {}
 
 
@@ -1972,32 +1975,45 @@ def served_index_dir(spark, sf_dir: str, residual: bool = False, kind: str | Non
 
     if kind is None:
         kind = "pq_residual" if residual else "pq"
-    key = (sf_dir, kind, _corpus_fingerprint(sf_dir))
+    # N_CELLS is in the key: `ivf_cells_override` retunes the index a
+    # build trains, so one process serving one sf_dir at two N_CELLS
+    # values must not get the first index back
+    key = (sf_dir, kind, _IVF_CELLS, _corpus_fingerprint(sf_dir))
     d = _SERVED_INDEX.get(key)
     probe_sub = {
         "flat": "ivf_vectors",
         "flat_label": "ivf_vectors",
         "flat_corpus": "ivf_vectors",
         "sq8": "sq8_codes",
+        "sq8_corpus": "sq8_codes",
     }.get(kind, "pq_codes")
     if d is None or not os.path.isdir(f"{d}/{probe_sub}"):
         if kind == "flat":
             d = build_ivf_flat_index(
                 spark, sf_dir, tempfile.mkdtemp(prefix="ivfflat_index_")
             )
-        elif kind == "flat_corpus":
-            # the online-serving twin's layout: built on the CORPUS
+        elif kind in ("flat_corpus", "sq8_corpus"):
+            # the incremental tier's layouts: built on the CORPUS
             # partition only (vec_id % 7 != 0 — the repo's incremental-
             # tier convention), so the %7 query stream probes an index
-            # that never saw the queries. READ-ONLY consumers only: the
-            # stream-append roundtrip keeps building fresh (it mutates).
+            # that never saw the queries and the %7 append stream lands
+            # on yesterday's index. Read-only consumers serve the memo
+            # itself; mutating consumers (the stream-append roundtrips)
+            # clone it per call with `snapshot_index_dir` and mutate
+            # only the clone.
             emb = table(spark, sf_dir, "embeddings").select(
                 "vec_id", "embedding"
             ).where(F.col("vec_id") % 7 != 0)
-            d = build_ivf_flat_index(
-                spark, sf_dir, tempfile.mkdtemp(prefix="ivfflatcorpus_index_"),
-                emb=emb,
-            )
+            if kind == "flat_corpus":
+                d = build_ivf_flat_index(
+                    spark, sf_dir,
+                    tempfile.mkdtemp(prefix="ivfflatcorpus_index_"), emb=emb,
+                )
+            else:
+                d = build_ivf_sq8_index(
+                    spark, sf_dir,
+                    tempfile.mkdtemp(prefix="ivfsq8corpus_index_"), emb=emb,
+                )
         elif kind == "flat_label":
             d = build_ivf_flat_index(
                 spark,
@@ -2018,6 +2034,22 @@ def served_index_dir(spark, sf_dir: str, residual: bool = False, kind: str | Non
             )
         _SERVED_INDEX[key] = d
     return d
+
+
+def snapshot_index_dir(base: str) -> str:
+    """Private copy of the index store at ``base`` for a mutating
+    consumer (append, delete, fold, compact), in a fresh temp dir;
+    ``base`` is never written. A plain byte copy, O(store bytes), on
+    purpose: a hard-linked copy shares inodes, so any in-place rewrite
+    through it (a writer truncating ``_SUCCESS`` or a ``.crc``) writes
+    the base too, and a symlinked store dir would take the copy's delta
+    and fold straight into the base."""
+    import os
+    import shutil as sh
+    import tempfile
+
+    dst = os.path.join(tempfile.mkdtemp(prefix="ivf_snapshot_"), "idx")
+    return sh.copytree(base, dst)
 
 
 @query("knn_ivfpq_served", oracle=ORACLES["knn_ivfpq"])
